@@ -3,8 +3,9 @@
 
     python3 perfbench/run.py --workload batch_chain --seed 1 --seconds 10 --trace 0
 
-Run from the root of a source tree. The program generates its input
-tables from ``--seed`` (``perfbench/datagen.py``), starts the engine's
+Run from the root of a source tree. The program generates its inputs
+from ``--seed`` (tables in ``perfbench/datagen.py``, registers and
+blobs in ``perfbench/service.py``), starts the engine's
 own session (``acuvate_spark.session.get_spark``), sets up and warms
 it, measures the workload for ``--seconds``, checks every output, and
 prints a report followed by one JSON line:
@@ -37,7 +38,7 @@ DRIVER_MEM = "2g"
 
 END_TO_END = {
     "setup_s": "s",
-    "op_p50_ms": "ms",
+    "read_p50_ms": "ms",
     "ops_per_s": "1/s",
     "freshness_p50_s": "s",
     "peak_rss_mb": "MB",
@@ -105,7 +106,11 @@ def _prepare_env(work: str) -> None:
     os.environ["TMPDIR"] = tmp
     # -XX:-UsePerfData: the JVM would otherwise write /tmp/hsperfdata_*
     java_opts = f"-Djava.io.tmpdir={tmp} -Dderby.system.home={work} -XX:-UsePerfData"
+    # The JVM is launched before the engine's builder runs, so its heap
+    # size has to be given at launch; spark.driver.memory set later by
+    # the builder would be ignored.
     os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--driver-memory", DRIVER_MEM,
         "--conf", "spark.ui.showConsoleProgress=false",
         "--conf", f"spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
         "--driver-java-options", java_opts,
@@ -115,7 +120,7 @@ def _prepare_env(work: str) -> None:
 
 class Ctx:
     def __init__(self, args, work: str, sf_dir: str):
-        self.seed, self.seconds, self.tamper = args.seed, args.seconds, args.tamper
+        self.seed, self.seconds, self.tamper, self.scale = args.seed, args.seconds, args.tamper, args.scale
         self.work, self.sf_dir = work, sf_dir
         self.spark = None
         self.tracer = None
@@ -144,16 +149,16 @@ def run_batch(ctx, setup: dict) -> tuple[dict, dict, int, list[str]]:
             })
             setup.update(py_worker_warm_s=warm["py_worker_warm_s"], scan_s=warm["scan_s"])
         cold = batch.warm(ctx, _nproc())
-        setup.update(cold_pass_s=cold["wall_s"], warm_s=now() - t0)
-        log(f"cold pass {cold['wall_s']:.2f}s")
+        setup.update(cold_pass_s=cold[0]["wall_s"], warm_s=now() - t0)
+        log("set-up passes " + ", ".join(f"{p['wall_s']:.2f}s" for p in cold))
         passes = batch.measure(ctx)
-    problems = [p for run in [cold, *passes] for p in run["problems"]]
+    problems = [p for run in [*cold, *passes] for p in run["problems"]]
     e2e = batch.end_to_end(passes)
     e2e["peak_rss_mb"] = rss.peak_mb
     layer = batch.per_layer(passes)
     if ctx.tracer.enabled:
         layer["trace.overhead_pct"] = batch.overhead_pct(passes)
-    attempted = sum(len(p["queries"]) for p in [cold, *passes])
+    attempted = sum(len(p["queries"]) for p in [*cold, *passes])
     log(f"{len(passes)} passes in {now() - t0:.1f}s: " + ", ".join(f"{p['wall_s']:.2f}" for p in passes))
     return e2e, layer, attempted, problems
 
@@ -163,7 +168,7 @@ def run_service(ctx, setup: dict) -> tuple[dict, dict, int, list[str]]:
     from perfbench import service
     from perfbench.common import RssSampler, dir_bytes, median, now, parallel, percentile
 
-    seeds = service.seed_rows(ctx.sf_dir)
+    seeds = service.seed_rows(ctx.seed, ctx.scale)
     plans, final = service.plan(ctx.seed, ctx.seconds, seeds)
     schedule = service.blob_schedule(ctx.seed, ctx.seconds)
     root = os.path.join(ctx.work, "registry")
@@ -195,16 +200,23 @@ def run_service(ctx, setup: dict) -> tuple[dict, dict, int, list[str]]:
 
     obs = [o for results in run["results"] for o in results]
     lat = [o["latency"] for o in obs]
+    # Writes are a third of the calls, so the median of all calls would
+    # sit in the slow tail of the reads (reads that overlap the other
+    # client's rewrite), where it jumps from run to run. Writes show in
+    # ops_per_s and in the per-call layer metrics.
+    reads = [o["latency"] for o in obs if o["kind"] in service.READS]
+    writes = [o["latency"] for o in obs if o["kind"] not in service.READS]
     good = [n for _, n, bad in schedule if not bad]
     fresh = [blob.committed[n] - blob.landed[n] for n in good if n in blob.committed]
     e2e = {
-        "op_p50_ms": median(lat) * 1000.0,
+        "read_p50_ms": median(reads) * 1000.0,
         "ops_per_s": len(lat) / run["registry_wall_s"],
         "freshness_p50_s": median(fresh),
         "peak_rss_mb": rss.peak_mb,
-        "samples": len(lat),
+        "samples": len(reads),
         "blob_samples": len(fresh),
-        "op_p90_ms": percentile(lat, 90) * 1000.0,
+        "read_p90_ms": percentile(reads, 90) * 1000.0,
+        "write_p50_ms": median(writes) * 1000.0,
         "freshness_p90_s": percentile(fresh, 90),
     }
 
@@ -250,10 +262,14 @@ def run_service(ctx, setup: dict) -> tuple[dict, dict, int, list[str]]:
         "blob_ingest.generator_late_ms": max(blob.late) * 1000.0,
     })
     layer["blob_ingest.retry_ratio"] = blob.retry_ratio
-    if ctx.tracer.enabled:
-        on = [o["latency"] for o in obs if o["traced"]]
-        off = [o["latency"] for o in obs if not o["traced"]]
-        layer["trace.overhead_pct"] = (median(on) / median(off) - 1.0) * 100.0
+    if ctx.tracer.enabled:  # median over call kinds of traced / untraced latency
+        ratios = []
+        for kind in dict.fromkeys(service.OP_BLOCK):
+            on = [o["latency"] for o in obs if o["kind"] == kind and o["traced"]]
+            off = [o["latency"] for o in obs if o["kind"] == kind and not o["traced"]]
+            if on and off:
+                ratios.append(median(on) / median(off) - 1.0)
+        layer["trace.overhead_pct"] = median(ratios) * 100.0
     attempted = len(obs) + len(schedule) + len(final)
     log(f"{len(passes)} ingest passes, {drain_passes} drain passes")
     return e2e, layer, attempted, problems
@@ -265,13 +281,13 @@ def run(args, work: str) -> dict:
 
     log("start")
     sf_dir = os.path.join(work, "tables")
-    rows = datagen.generate(sf_dir, args.seed, args.scale)
-    log(f"generated {sum(rows.values())} rows (seed {args.seed}, scale {args.scale})")
     ctx = Ctx(args, work, sf_dir)
     batch = args.workload == "batch_chain"
     if batch:
         from perfbench.batch import expected
 
+        rows = datagen.generate(sf_dir, args.seed, args.scale)
+        log(f"generated {sum(rows.values())} rows (seed {args.seed}, scale {args.scale})")
         ctx.expected = expected(sf_dir, args.tamper == "oracle")
         log("oracle fingerprints ready")
     ctx.spark, setup = start_session(SESSION_CYCLES)

@@ -2,8 +2,9 @@
 then the blob-ingest loop, served by one session.
 
 * Registry: closed loop, two client threads. Each client owns two of
-  the four registers (the API's single-writer contract) and runs a
-  fixed, seeded sequence of reads (``get_data`` with and without
+  the four registers (the API's single-writer contract), seeded at
+  the register sizes of the sf0.1 test set, and runs a fixed sequence
+  (the seed picks keys and values) of reads (``get_data`` with and without
   search, ``get_data_after``, ``find_tag``) and writes
   (``upsert_tags``, ``apply_approvals``, ``delete_tags``). Every call
   is replayed on an in-Python model while the sequence is planned, so
@@ -26,32 +27,39 @@ import random
 import threading
 import time
 
-import pyarrow.parquet as pq
-
 from .common import dir_bytes, now
 
 CLIENTS = 2
 OWNER = {"Equipment": 0, "Line": 0, "Instrument": 1, "Cable": 1}
 PREFIX = {"Equipment": "EQ", "Instrument": "IN", "Line": "LN", "Cable": "CB"}
 PRIORITY = ("Equipment", "Instrument", "Line", "Cable")
-# One block of calls per client, nominally 12 s of work. Page reads
-# (get_data and keyset get_data_after) are most of it: as many calls
-# are faster than a get_data (keyset pages) as slower (search by tag,
-# writes), so the median call sits in the middle of the get_data
-# cluster instead of on a tail, where seed-to-seed shifts would move
-# it. Writes show in ops_per_s. Write sizes are fixed per slot, so
-# seeds differ in keys, not in cost.
+# One block of calls per client, nominally 12 s of work: 5 get_data,
+# 5 keyset get_data_after, one get_data_search and one find_tag, 2
+# upsert_tags, one apply_approvals and one delete_tags, in this order
+# (client 1 starts half a block in). A read that overlaps the other
+# client's register rewrite takes about twice as long as one that does
+# not, so the order of calls decides how many reads overlap a write. A
+# fixed order keeps that count the same for every seed; the seed picks
+# keys, pages, search terms, row contents and upsert sizes.
 OP_BLOCK = (
-    ["get_data"] * 5 + ["get_data_after"] * 5 + ["get_data_search", "find_tag"]
-    + ["upsert_tags"] * 2 + ["apply_approvals", "delete_tags"]
+    "get_data", "get_data_after", "upsert_tags", "get_data", "get_data_after", "find_tag",
+    "get_data", "get_data_after", "apply_approvals", "get_data", "get_data_after",
+    "get_data_search", "get_data", "get_data_after", "upsert_tags", "delete_tags",
 )
-UPSERT_ROWS = (1, 50)  # alternating; half of each upsert updates existing tags
+UPSERT_ROWS = (1, 100)  # size drawn per upsert; half of each upsert updates existing tags
 APPROVAL_SHAPE = (("old", "Edit"),) * 4 + (("old", "Add"), ("new", "Add"), ("new", "Add"), ("new", "Edit"))
 DELETE_ROWS = 3  # plus one tag that does not exist
 BLOCK_SECONDS = 12.0
 READS = {"get_data", "get_data_search", "get_data_after", "find_tag"}
 PAGE = 10
 MISSING_TAG = "ZZ-99999"
+
+# Register sizes of the sf0.1 test set: Equipment from ``part``,
+# Instrument from ``customer``, Line from a 30th of ``orders``, Cable from
+# ``supplier``. Every write rewrites its whole register, so the size sets
+# the write cost. ``tiny`` is the smoke-test scale.
+REGISTER_ROWS = {"Equipment": 20000, "Instrument": 15000, "Line": 5000, "Cable": 1000}
+REGISTER_SCALE = {"tiny": 0.01, "small": 1.0}
 
 # Blobs per second, landing over the first half of --seconds: well below
 # what one ingest pass clears on a busy 4-core host, so blob latency
@@ -122,24 +130,18 @@ class RegisterModel:
         return {(t, r["description"], r["document"], r["modified_by"]) for t, r in self.rows.items()}
 
 
-def seed_rows(sf_dir: str) -> dict[str, list[tuple]]:
-    """Initial register contents, read straight from the generated
-    parquet (independently of the engine)."""
-    part = pq.read_table(f"{sf_dir}/part.parquet", columns=["p_partkey", "p_name"]).to_pylist()
-    cust = pq.read_table(f"{sf_dir}/customer.parquet", columns=["c_custkey", "c_mktsegment"]).to_pylist()
-    orders = pq.read_table(f"{sf_dir}/orders.parquet", columns=["o_orderkey", "o_orderpriority"])
-    supp = pq.read_table(f"{sf_dir}/supplier.parquet", columns=["s_suppkey", "s_name"]).to_pylist()
-    rows = {
-        "Equipment": [(f"EQ-{r['p_partkey']:05d}", r["p_name"], f"DWG-{r['p_partkey'] % 97:03d}")
-                      for r in part],
-        "Instrument": [(f"IN-{r['c_custkey']:05d}", r["c_mktsegment"], f"DWG-{r['c_custkey'] % 89:03d}")
-                       for r in cust],
-        "Line": [(f"LN-{r['o_orderkey']:05d}", r["o_orderpriority"], f"DWG-{r['o_orderkey'] % 83:03d}")
-                 for r in orders.slice(0, max(100, orders.num_rows // 30)).to_pylist()],
-        "Cable": [(f"CB-{r['s_suppkey']:05d}", r["s_name"], f"DWG-{r['s_suppkey'] % 79:03d}")
-                  for r in supp],
-    }
-    return {reg: [(t, d, doc, "seed") for t, d, doc in rs] for reg, rs in rows.items()}
+def seed_rows(seed: int, scale: str) -> dict[str, list[tuple]]:
+    """Initial register contents, drawn from ``seed`` (independently of
+    the engine)."""
+    from .datagen import P_ADJ, P_NOUN
+
+    rng = random.Random(seed * 31 + 7)
+    rows = {}
+    for reg, n in REGISTER_ROWS.items():
+        n = max(100, round(n * REGISTER_SCALE[scale]))
+        rows[reg] = [(f"{PREFIX[reg]}-{k:05d}", f"{rng.choice(P_ADJ)} {rng.choice(P_NOUN)}",
+                      f"DWG-{rng.randint(0, 999):03d}", "seed") for k in range(n)]
+    return rows
 
 
 def _stable(tag: str) -> bool:
@@ -159,14 +161,17 @@ def plan(seed: int, seconds: float, seeds: dict[str, list[tuple]]):
     for client in range(CLIENTS):
         rng = random.Random(seed * 1000 + client)
         regs = [r for r, c in OWNER.items() if c == client]
-        kinds = OP_BLOCK * blocks
-        rng.shuffle(kinds)
+        # each kind alternates over the client's registers
+        half = len(OP_BLOCK) // 2 * client
+        seen: dict[str, int] = {}
+        calls = []
+        for kind in (OP_BLOCK[half:] + OP_BLOCK[:half]) * blocks:
+            seen[kind] = seen.get(kind, -1) + 1
+            calls.append((kind, regs[seen[kind] % len(regs)]))
         cursors: dict[str, tuple | None] = {}
         new_key = 90000 + client * 5000
         ops = []
-        upserts = 0
-        for kind in kinds:
-            reg = rng.choice(regs)
+        for kind, reg in calls:
             m = models[reg]
             mutable = sorted(t for t in m.rows if not _stable(t))
             op = {"kind": kind, "register": reg}
@@ -186,8 +191,7 @@ def plan(seed: int, seconds: float, seeds: dict[str, list[tuple]]):
                             if tag in models[r].rows), None)
                 op.update(tag=tag, expect=hit)
             elif kind == "upsert_tags":
-                n = UPSERT_ROWS[upserts % len(UPSERT_ROWS)]
-                upserts += 1
+                n = rng.randint(*UPSERT_ROWS)
                 rows = []
                 for tag in rng.sample(mutable, min(len(mutable), n // 2)):
                     rows.append((tag, f"updated {rng.randint(0, 999)}", f"DWG-{rng.randint(0, 999):03d}",
@@ -509,9 +513,14 @@ def measure(ctx, registry, plans, blob: BlobLoop) -> dict:
     results: list[list] = [[] for _ in plans]
 
     def client(i: int) -> None:
+        # every other call of each kind is traced, starting with client 0,
+        # so each kind has traced and untraced calls to compare
         last_rows: dict = {}
-        for k, op in enumerate(plans[i]):
-            results[i].append(run_op(ctx, registry, op, last_rows, traced=k % 2 == 0))
+        seen: dict[str, int] = {}
+        for op in plans[i]:
+            seen[op["kind"]] = seen.get(op["kind"], i + 1) + 1
+            traced = seen[op["kind"]] % 2 == 0
+            results[i].append(run_op(ctx, registry, op, last_rows, traced=traced))
 
     t0 = now()
     _run_threads([lambda i=i: client(i) for i in range(len(plans))])

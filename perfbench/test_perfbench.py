@@ -80,9 +80,17 @@ def test_registry_plan_is_seeded_and_fixed_in_composition():
     assert p1 != p3
     for ops in p1 + p3:
         assert sorted(op["kind"] for op in ops) == sorted(service.OP_BLOCK)
+    for a, b in zip(p1, p3):
+        assert [(op["kind"], op["register"]) for op in a] == [(op["kind"], op["register"]) for op in b]
     owned = {c: {op["register"] for op in ops if op["kind"] not in service.READS}
              for c, ops in enumerate(p1)}
     assert all(service.OWNER[r] == c for c, regs in owned.items() for r in regs)
+
+
+def test_register_seeds_are_seeded_at_sf01_size():
+    a = service.seed_rows(1, "small")
+    assert {reg: len(rows) for reg, rows in a.items()} == service.REGISTER_ROWS
+    assert a == service.seed_rows(1, "small") and a != service.seed_rows(2, "small")
 
 
 def test_blob_schedule_is_seeded():
