@@ -269,11 +269,7 @@ class TagRegistry:
         for reg in REGISTER_TYPES:
             b = (
                 self.table(reg)
-                .where(
-                    F.coalesce(F.col("modified_date"), F.col("modified_date")).between(
-                        window_start, window_end
-                    )
-                )
+                .where(F.col("modified_date").between(window_start, window_end))
                 .select("tag_no", "description", F.lit(reg).alias("tag_type"))
             )
             out = b if out is None else out.unionByName(b)

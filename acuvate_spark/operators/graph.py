@@ -8,14 +8,6 @@ fixpoint. Converges in O(diameter) rounds; each round is one
 shuffle-colocated join + groupBy. The P&ID graphs this engine targets
 have tiny diameters (lines connect nearby components), so plain
 propagation with an early-exit check is the right default trade.
-
-For long-diameter graphs (web crawls, chain-shaped link graphs at
-100 TB) ``connected_components_star`` provides the
-large-star/small-star CONTRACTION of Kiveris et al. 2014 ("Connected
-Components in MapReduce and Beyond") behind the same interface:
-O(log^2 n) rounds guaranteed, ~log n observed, where min-label needs
-O(diameter). Same output, same determinism; tests pin both the
-equivalence and the round bound on a committed long-chain fixture.
 """
 
 from __future__ import annotations
@@ -198,7 +190,9 @@ def connected_components(
             # job per round for the same result)
             .localCheckpoint(eager=False)
         )
-        n_changed = new_labels.agg(F.sum("changed")).collect()[0][0]
+        n_changed, null_labeled = new_labels.agg(
+            F.sum("changed"), F.max(F.col("node").isNull())
+        ).collect()[0]
         ring.rotate()  # new_labels is materialized: free the old round
         labels = new_labels.drop("changed")
         if not n_changed:
@@ -213,120 +207,18 @@ def connected_components(
         )
     if rounds_out is not None:
         rounds_out.append(rounds)
-    return labels
-
-
-def _edge_signature(df: DataFrame) -> tuple:
-    """1-row (count, xor-of-hashes) fingerprint of an edge set — the
-    cheap per-round stability probe for :func:`connected_components_star`.
-    A match is only a HINT (64-bit collisions exist); the caller
-    confirms with an exact set-equality job before breaking. Module
-    level so tests can stub it to a constant and prove the exact
-    confirm, not the hash, decides convergence."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # overflow-free fold
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 40,
-    rounds_out: list | None = None,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.
-    2014): same contract as :func:`connected_components` — undirected
-    edges(src,dst) -> (node, component) with component = min reachable
-    id — but the round count is O(log^2 n) worst case / ~log n
-    observed instead of O(diameter), because each round CONTRACTS the
-    graph toward a star forest rather than propagating labels one hop:
-
-    * large-star: every node's strictly-larger neighbors re-attach to
-      the min of its neighborhood (incl. itself);
-    * small-star: every edge is oriented high->low and the high node
-      plus its smaller neighbors re-attach to the smallest of them.
-
-    Each phase is one groupBy + one equi-join over the CURRENT edge
-    set (which only shrinks toward n-1 star edges), with
-    localCheckpoint cutting lineage per round; convergence is
-    edge-set stability, checked by a 1-row (count, hash-sum)
-    signature — no driver-side edge materialization at any point. A
-    signature match is CONFIRMED by one exact set-equality job
-    (both-ways ``exceptAll`` empty) before breaking, so a 64-bit hash
-    collision between different edge sets cannot stop contraction
-    before fixpoint — the exact check runs once per convergence, not
-    once per round."""
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # nodes is loop-invariant (before the ring, never freed); keep=2
-    # because the convergence confirm reads the PREVIOUS round's edge
-    # set (prev.exceptAll(e)) after the new round materializes.
-    ring = CheckpointRing(edges.sparkSession, keep=2)
-    e = e0.where(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
-    ring.rotate()  # round 0: the initial edge set
-
-    rounds = 0
-    sig = _edge_signature(e)
-    prev = e
-    for _ in range(max_iter):
-        rounds += 1
-        # large-star
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
+    # the per-round joins are null-UNSAFE on purpose (a NULL id must
+    # not bridge its neighbours), so a NULL node with no non-NULL
+    # neighbour never joins and drops out of the loop; the
+    # reachability oracle still emits it as its own component (NULL,
+    # NULL). Re-add it from the edge set's NULL self-loop (an empty
+    # scan when NULL is no node). The flag rides on the loop's
+    # convergence job, so this costs no extra Spark job — a null-safe
+    # left join of all nodes to the labels cost two more per call.
+    if not null_labeled:
+        labels = labels.unionByName(
+            sym.where(F.col("a").isNull() & F.col("b").isNull()).select(
+                F.col("a").alias("node"), F.col("a").alias("component")
+            )
         )
-        e = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over high->low oriented edges
-        o = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            o.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        ring.rotate()  # e materialized (eager): free rounds beyond prev
-        new_sig = _edge_signature(e)
-        if new_sig == sig:
-            # confirm exactly before trusting the 64-bit signature:
-            # both-ways exceptAll is empty iff the multisets (here:
-            # distinct sets) are equal — one job, convergence only
-            diff = prev.exceptAll(e).unionByName(e.exceptAll(prev))
-            if diff.isEmpty():
-                break
-        sig = new_sig
-        prev = e
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge within {max_iter} "
-            "rounds — not expected below ~2^40 nodes; raise max_iter"
-        )
-    if rounds_out is not None:
-        rounds_out.append(rounds)
-    # at fixpoint e is a star forest child->min-root; roots (and
-    # singleton inputs, e.g. self-loop-only nodes) label themselves
-    labels = (
-        nodes.join(e, nodes.node == e.u, "left")
-        .select("node", F.coalesce("v", "node").alias("component"))
-    )
     return labels

@@ -151,8 +151,8 @@ def nms_grid(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
     non-zero only against kept boxes anchored in its 3x3 cell
     neighborhood, and greedy NMS decisions depend only on overlap with
     kept boxes. Same sort, same decisions, same rows. Kept as a
-    sibling of :func:`nms` (the prefix_windows /
-    connected_components_star pattern): the registered queries'
+    sibling of :func:`nms` (the prefix_windows pattern): the
+    registered queries'
     fixture pages are tens of boxes, where the plain vectorized sweep
     is faster.
 

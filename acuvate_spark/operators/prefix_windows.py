@@ -10,9 +10,8 @@ fix (queries/core.py) inlines exactly the decomposition this module
 generalizes. These operators are the stand-alone recipe for the other
 two shapes, pinned result-identical to their single-window twins so a
 hotter corpus than the audit's can swap them in without re-deriving
-the boundary algebra (the `connected_components_star` precedent: the
-alternative physical strategy lives behind the same semantics,
-measured and tested, before the day it is needed).
+the boundary algebra: the alternative physical strategy lives behind
+the same semantics, measured and tested, before the day it is needed.
 
 The decomposition (token_budget_mix / running_totals pattern): bucket
 rows by a PREFIX of the sort order (calendar day of the timestamp —

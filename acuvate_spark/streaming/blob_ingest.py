@@ -81,7 +81,7 @@ def _write_retry_state(state: DataFrame, retry_dir: str) -> None:
 
 def _committed_union(spark: SparkSession, root: str) -> DataFrame | None:
     """Union of the fully committed child dirs of ``root`` (the
-    move/promote sinks' crash-invisibility glob)."""
+    ``_SUCCESS``-gated crash-invisibility glob of ``sinks._committed_files``)."""
     from ..operators.sinks import _committed_files
 
     files = _committed_files(root)

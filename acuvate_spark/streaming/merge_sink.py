@@ -35,8 +35,8 @@ def _current_version(target_dir: str, max_num: int | None = None) -> str | None:
     """Newest COMMITTED version at or below ``max_num``. A version dir
     counts only with its ``_SUCCESS`` marker — a writer killed mid
     job-commit (part files promoted, marker absent) must stay
-    invisible to readers, the same crash-invisibility rule the move/
-    promote sinks enforce; the next replay overwrites the partial dir
+    invisible to readers, the same crash-invisibility rule the Tag
+    Registry versions follow; the next replay overwrites the partial dir
     (same batch_id -> same target) and commits it properly."""
     if not os.path.isdir(target_dir):
         return None

@@ -141,7 +141,7 @@ def test_registry_uncommitted_version_is_invisible(spark, tmp_path):
     """A register version whose writer was killed mid job-commit (part
     files, no _SUCCESS) must not become current — readers serve the
     previous committed version (r07, same crash-invisibility rule as
-    the move/promote/merge sinks)."""
+    the merge sink)."""
     import os
     import shutil
 

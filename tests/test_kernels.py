@@ -197,79 +197,6 @@ def test_imageprocess_fixture_matches_kernels(spark):
     assert live_segs == fix_segs and len(fix_segs) > 10
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """connected_components_star must produce exactly the min-label
-    result on a multi-component graph with merging chains."""
-    from acuvate_spark.operators.graph import connected_components_star
-
-    hops = spark.range(30).select((F.col("id") * 1000).alias("c")).select(
-        "c", F.explode(F.sequence(F.lit(0), F.lit(6))).alias("i")
-    )
-    edges = hops.select(
-        (F.col("c") + F.col("i")).alias("src"),
-        (F.col("c") + F.col("i") + 1).alias("dst"),
-    )
-    expected = {
-        (r["node"], r["component"])
-        for r in connected_components(edges).collect()
-    }
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components_star(edges).collect()
-    }
-    assert got == expected and len(got) == 30 * 8
-
-
-def test_star_cc_rounds_are_logarithmic_on_long_chain(spark):
-    """The 100 TB caveat the star variant exists for: a 1500-node
-    chain has diameter 1499 — min-label would need ~1500 rounds —
-    while large-star/small-star contracts it in O(log n) rounds and
-    still labels every node with the chain min."""
-    from acuvate_spark.operators.graph import connected_components_star
-
-    n = 1500
-    edges = spark.range(n - 1).select(
-        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
-    )
-    rounds: list = []
-    labels = connected_components_star(edges, rounds_out=rounds)
-    stats = labels.agg(
-        F.count("*").alias("n"),
-        F.sum((F.col("component") != 0).cast("int")).alias("mislabeled"),
-    ).collect()[0]
-    assert stats["n"] == n and stats["mislabeled"] == 0
-    # ~log2(1500) = 10.6; the two-phase bound is log^2 in theory but
-    # ~log n observed — 2*log2(n) is a generous ceiling that a
-    # diameter-bound algorithm (1499 rounds) can never meet
-    assert rounds[0] <= 22, f"rounds {rounds[0]} should be ~log n, not diameter"
-
-
-def test_star_cc_signature_collision_cannot_stop_early(spark, monkeypatch):
-    """ADVICE r05: a 64-bit signature collision between DIFFERENT edge
-    sets must not end contraction before fixpoint. Stub the signature
-    to a constant — the worst case, every round 'collides' — and the
-    exact set-equality confirm must keep the loop going until the edge
-    set is genuinely stable, yielding exactly the min-label result."""
-    from acuvate_spark.operators import graph as graph_mod
-
-    monkeypatch.setattr(graph_mod, "_edge_signature", lambda df: (0, 0))
-    hops = spark.range(8).select((F.col("id") * 100).alias("c")).select(
-        "c", F.explode(F.sequence(F.lit(0), F.lit(5))).alias("i")
-    )
-    edges = hops.select(
-        (F.col("c") + F.col("i")).alias("src"),
-        (F.col("c") + F.col("i") + 1).alias("dst"),
-    )
-    got = {
-        (r["node"], r["component"])
-        for r in graph_mod.connected_components_star(edges).collect()
-    }
-    expected = {
-        (r["node"], r["component"]) for r in connected_components(edges).collect()
-    }
-    assert got == expected and len(got) == 8 * 7
-
-
 def test_nms_detections_matches_golden_fixture(spark):
     """VERDICT r05 item 3: the nms_detections registry query is
     rows-only at the driver (greedy NMS is inherently sequential per

@@ -127,15 +127,29 @@ def test_simhash_packed_lanes_match_naive_reference(spark):
     assert got == _simhash_reference(docs)
 
 
-def test_star_cc_matches_label_cc_on_random_graphs(spark):
-    """Star contraction vs min-label propagation on random graphs —
-    both must agree with plain reachability for any topology."""
+def _union_find_components(edges):
+    """Plain-Python reachability: node -> min node id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in list(parent)}
+
+
+def test_cc_matches_union_find_on_random_graphs(spark):
+    """Min-label propagation vs a plain union-find on random graphs —
+    the labels must equal reachability for any topology."""
     import random as _r
 
-    from acuvate_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from acuvate_spark.operators.graph import connected_components
 
     rng = _r.Random(11)
     for trial in range(3):
@@ -146,15 +160,11 @@ def test_star_cc_matches_label_cc_on_random_graphs(spark):
         ]
         edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
         df = spark.createDataFrame(edges, "src long, dst long")
-        a = {
+        got = {
             (r["node"], r["component"])
             for r in connected_components(df, max_iter=60).collect()
         }
-        b = {
-            (r["node"], r["component"])
-            for r in connected_components_star(df).collect()
-        }
-        assert a == b, f"trial {trial}: star vs label disagree"
+        assert got == _union_find_components(edges), f"trial {trial}"
 
 
 def test_cc_null_endpoints_propagate_like_distinct_seed(spark):
@@ -164,16 +174,22 @@ def test_cc_null_endpoints_propagate_like_distinct_seed(spark):
     ring. NULL must behave exactly as the pre-r15 distinct-seeded form:
     it is a node, its component is the min component among its non-NULL
     neighbors, and a node whose only edge partner is NULL keeps its own
-    id."""
+    id. A NULL node with no non-NULL neighbor is its own component
+    (NULL, NULL), as the reachability oracle's recursive CTE emits it."""
     from acuvate_spark.operators.graph import connected_components
 
-    edges = [(None, 7), (7, 3), (9, None), (5, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        (r["node"], r["component"])
-        for r in connected_components(df).collect()
-    }
-    assert got == {(3, 3), (7, 3), (None, 3), (9, 9), (5, 5)}
+    cases = [
+        ([(None, 7), (7, 3), (9, None), (5, 5)],
+         {(3, 3), (7, 3), (None, 3), (9, 9), (5, 5)}),
+        ([(None, None), (1, 2)], {(None, None), (1, 1), (2, 1)}),
+    ]
+    for edges, want in cases:
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = {
+            (r["node"], r["component"])
+            for r in connected_components(df).collect()
+        }
+        assert got == want, edges
 
 
 def test_cc_prepartition_gate_result_invariant(spark):
